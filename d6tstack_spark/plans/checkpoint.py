@@ -1215,8 +1215,9 @@ def repair_duplicate_blocks(spark: SparkSession, state_dir: str) -> int:
     removed; 0 means nothing was rewritten."""
     bd = _blocks_dir(state_dir)
     blocks = spark.read.parquet(bd)
-    total = blocks.count()
-    distinct = blocks.select("block_id", "column").distinct().count()
+    total, distinct = blocks.agg(
+        F.count(F.lit(1)), F.countDistinct("block_id", "column")
+    ).collect()[0]
     if total == distinct:
         return 0
     from d6tstack_spark.operators.sinks import write_blocks
@@ -1401,7 +1402,6 @@ def _encode_resume_locked(
         repaired = repair_duplicate_blocks(spark, state_dir)
         if repaired:
             done = completed_block_ids(spark, state_dir)
-    n_done = 0
     todo = sdf
     from d6tstack_spark.operators.encode import SUB_BLOCK_BITS
 
@@ -1416,7 +1416,6 @@ def _encode_resume_locked(
                 F.shiftright("block_id", SUB_BLOCK_BITS).alias("block_id")
             ).distinct()
         )
-        n_done = done.count()
     try:
         # base ids whose blocks a purge physically rewrote under new ids
         # (maintenance.purge_deletes): those splits are complete too — their

@@ -39,8 +39,10 @@ from __future__ import annotations
 import json
 import os
 import time
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession, Window, functions as F
+from pyspark import StorageLevel
+from pyspark.sql import SparkSession, functions as F, types as T
 
 # deterministic test hook: raise after N adoption renames during a purge
 # apply, to drill the journal-replay recovery path (a real kill lands in a
@@ -406,18 +408,20 @@ def cluster_blocks(
                 "re-encode manifest drifted from the stored manifest — "
                 "decode→encode is no longer schema-stable; aborting"
             )
-        n_new = _commit_rewritten_blocks(
-            spark,
-            state_dir,
-            affected=paths,
-            new_blocks=new_blocks,
-            base_ids=ablocks.select(
-                F.shiftright("block_id", SUB_BLOCK_BITS).alias("block_id")
-            ).distinct(),
-            n_expected=int(n_before),
-            tomb_ids=[],
-            parity_label=f"expected all {n_before} rows",
-        )
+        with _materialized_blocks(new_blocks) as block_rows:
+            n_new = _commit_rewritten_blocks(
+                spark,
+                state_dir,
+                affected=paths,
+                new_blocks=new_blocks,
+                block_ids=[b for b, _ in block_rows],
+                base_ids=ablocks.select(
+                    F.shiftright("block_id", SUB_BLOCK_BITS).alias("block_id")
+                ).distinct(),
+                n_expected=int(n_before),
+                tomb_ids=[],
+                parity_label=f"expected all {n_before} rows",
+            )
         evolved = [c for c, m in manifest.items() if m.get("evolved")]
         if evolved:
             clean = {
@@ -465,7 +469,13 @@ def purge_deletes(
     fine for maintenance, the payload is only the affected slice), the
     keep-rows re-encode as fresh blocks, and block ids remap into a
     reserved space (bit 61 | persistent counter — disjoint from
-    file-derived ids forever, across any number of purges). The original
+    file-derived ids forever, across any number of purges). The slice is
+    encoded exactly once: the re-encoded blocks are persisted and one
+    aggregation collects each block's row count to the driver, which
+    yields the kept-row count (so the matched count needs no separate
+    decode pass), the block count, and the sorted ids the dense id
+    mapping is built from on the driver; the write then reads the cached
+    blocks. The original
     base ids are appended to ``<state>/rewritten`` so ``encode_resume``
     still treats their source splits as complete (re-encoding them would
     resurrect the deleted rows).
@@ -724,15 +734,9 @@ def purge_deletes(
                     how="left_anti",
                 )
             kept = gdec if kept is None else kept.unionByName(gdec)
-        n_kept = kept.count()
-        n_matched = n_before - n_kept
-        report["matched"] = int(n_matched)
-        if n_matched == 0:
-            _clear_tombstones(state_dir, tomb_ids)
-            _record_tombstone_clear(state_dir, tomb_ids, paths)
-            return report
 
-        # ---- re-encode the keep-rows as fresh blocks under rewritten ids
+        # ---- re-encode the keep-rows as fresh blocks under rewritten ids;
+        # the kept count is the sum of the encoded blocks' row counts
         kept = kept.repartition(
             max(spark.sparkContext.defaultParallelism, len(affected))
         )
@@ -742,31 +746,40 @@ def purge_deletes(
             mode="local",
             target_block_rows=target_block_rows,
         )
-        def _types(m: dict) -> dict:
-            # compare ptype/logical only: the stored manifest may carry
-            # schema-evolution markers the frame-derived one never has
-            return {k: (v["ptype"], v["logical"]) for k, v in m.items()}
+        with _materialized_blocks(new_blocks) as block_rows:
+            n_kept = sum(r for _, r in block_rows)
+            n_matched = n_before - n_kept
+            report["matched"] = int(n_matched)
+            if n_matched == 0:
+                _clear_tombstones(state_dir, tomb_ids)
+                _record_tombstone_clear(state_dir, tomb_ids, paths)
+                return report
 
-        if _types(new_manifest) != _types(manifest):
-            raise RuntimeError(
-                "re-encode manifest drifted from the stored manifest — "
-                "decode→encode is no longer schema-stable; aborting purge"
+            def _types(m: dict) -> dict:
+                # compare ptype/logical only: the stored manifest may carry
+                # schema-evolution markers the frame-derived one never has
+                return {k: (v["ptype"], v["logical"]) for k, v in m.items()}
+
+            if _types(new_manifest) != _types(manifest):
+                raise RuntimeError(
+                    "re-encode manifest drifted from the stored manifest — "
+                    "decode→encode is no longer schema-stable; aborting purge"
+                )
+            n_new_blocks = _commit_rewritten_blocks(
+                spark,
+                state_dir,
+                affected=affected,
+                new_blocks=new_blocks,
+                block_ids=[b for b, _ in block_rows],
+                base_ids=ablocks.select(
+                    F.shiftright("block_id", SUB_BLOCK_BITS).alias("block_id")
+                ).distinct(),
+                n_expected=n_kept,
+                tomb_ids=tomb_ids,
+                parity_label=(
+                    f"expected {n_before} - {n_matched} matched = {n_kept}"
+                ),
             )
-        n_new_blocks = _commit_rewritten_blocks(
-            spark,
-            state_dir,
-            affected=affected,
-            new_blocks=new_blocks,
-            base_ids=ablocks.select(
-                F.shiftright("block_id", SUB_BLOCK_BITS).alias("block_id")
-            ).distinct(),
-            n_expected=n_before - n_matched,
-            tomb_ids=tomb_ids,
-            parity_label=(
-                f"expected {n_before} - {n_matched} matched = "
-                f"{n_before - n_matched}"
-            ),
-        )
         report["files_rewritten"] = len(affected)
         report["blocks_written"] = int(n_new_blocks)
         report["purged_rows"] = int(n_matched)
@@ -984,18 +997,20 @@ def update_where(
                 "re-encode manifest drifted from the stored manifest — "
                 "a SET expression changed a column's type; aborting update"
             )
-        n_new = _commit_rewritten_blocks(
-            spark,
-            state_dir,
-            affected=affected,
-            new_blocks=new_blocks,
-            base_ids=ablocks.select(
-                F.shiftright("block_id", SUB_BLOCK_BITS).alias("block_id")
-            ).distinct(),
-            n_expected=int(n_before),
-            tomb_ids=[],
-            parity_label=f"expected all {n_before} rows of the slice",
-        )
+        with _materialized_blocks(new_blocks) as block_rows:
+            n_new = _commit_rewritten_blocks(
+                spark,
+                state_dir,
+                affected=affected,
+                new_blocks=new_blocks,
+                block_ids=[b for b, _ in block_rows],
+                base_ids=ablocks.select(
+                    F.shiftright("block_id", SUB_BLOCK_BITS).alias("block_id")
+                ).distinct(),
+                n_expected=int(n_before),
+                tomb_ids=[],
+                parity_label=f"expected all {n_before} rows of the slice",
+            )
         report["files_rewritten"] = len(affected)
         report["blocks_written"] = int(n_new)
         return report
@@ -1026,26 +1041,52 @@ def _record_tombstone_clear(
     )
 
 
+@contextmanager
+def _materialized_blocks(blocks):
+    """Encode a lazy rewrite's blocks frame exactly once: persist it
+    (``MEMORY_AND_DISK``) and, in the same job that fills the cache,
+    collect one ``(block_id, n_rows)`` pair per block, sorted by id. The
+    caller's row count, the id remap and the write all read the cached
+    blocks instead of re-running decode → shuffle → Python encode. Yields
+    the sorted pairs; unpersists on every exit path."""
+    blocks.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        rows = blocks.groupBy("block_id").agg(F.max("n_rows")).collect()
+        yield sorted((int(b), int(n)) for b, n in rows)
+    finally:
+        blocks.unpersist()
+
+
 def _commit_rewritten_blocks(
     spark: SparkSession,
     state_dir: str,
     affected: list[str],
     new_blocks,
+    block_ids: list[int],
     base_ids,
     n_expected: int,
     tomb_ids: list,
     parity_label: str,
 ) -> int:
-    """The journaled roll-forward commit shared by :func:`purge_deletes`
-    and :func:`cluster_blocks`: remap the re-encoded blocks into the
-    reserved bit-61 id space (persistent per-state counter), write them
-    NEXT TO the live dir, verify row parity BEFORE anything becomes
-    visible, then commit. Order matters: (1) the rewritten-bases append
-    and the id counter bump are harmless if orphaned by a crash (resume
-    just skips splits whose blocks still exist); (2) the journal is the
-    commit point; (3) apply is adopt-then-remove, replayable forward by
-    ``_replay_purge_journal`` at every writer entry point. Returns the
-    number of replacement blocks. Caller holds the writer lease."""
+    """The journaled roll-forward commit shared by :func:`purge_deletes`,
+    :func:`update_where` and :func:`cluster_blocks`: remap the re-encoded
+    blocks into the reserved bit-61 id space (persistent per-state
+    counter), write them NEXT TO the live dir, verify row parity BEFORE
+    anything becomes visible, then commit.
+
+    ``new_blocks`` is the caller's :func:`_materialized_blocks` frame and
+    ``block_ids`` its sorted distinct ids. The dense id mapping is built
+    on the driver from that list — the i-th smallest id (i = 1..n) becomes
+    ``_REWRITE_ID_BIT + ((next + i) << SUB_BLOCK_BITS)``, ``next`` being
+    the persisted counter — and ships as a broadcast join side, so the
+    write reads the cached blocks and no Spark job runs to number them.
+
+    Order matters: (1) the rewritten-bases append and the id counter bump
+    are harmless if orphaned by a crash (resume just skips splits whose
+    blocks still exist); (2) the journal is the commit point; (3) apply
+    is adopt-then-remove, replayable forward by ``_replay_purge_journal``
+    at every writer entry point. Returns the number of replacement
+    blocks. Caller holds the writer lease."""
     from d6tstack_spark.operators.encode import (
         SUB_BLOCK_BITS,
         BLOCKS_SCHEMA,
@@ -1067,17 +1108,18 @@ def _commit_rewritten_blocks(
             base_ord = json.load(f)["next"]
     except FileNotFoundError:
         base_ord = 0
-    ids = new_blocks.select("block_id").distinct()
-    # global row_number over the distinct id list only — block count of
-    # the affected slice, not rows; the payload never enters this window
-    mapping = ids.withColumn(
-        "new_id",
-        F.lit(_REWRITE_ID_BIT).cast("long")
-        + F.shiftleft(
-            (F.lit(base_ord) + F.row_number().over(
-                Window.orderBy("block_id")
-            )).cast("long"),
-            SUB_BLOCK_BITS,
+    # non-nullable, like the encoder's block_id: the written parquet
+    # column stays REQUIRED, so replacement files match fresh appends
+    mapping = spark.createDataFrame(
+        [
+            (b, _REWRITE_ID_BIT + ((base_ord + i) << SUB_BLOCK_BITS))
+            for i, b in enumerate(block_ids, 1)
+        ],
+        T.StructType(
+            [
+                T.StructField("block_id", T.LongType(), False),
+                T.StructField("new_id", T.LongType(), False),
+            ]
         ),
     )
     remapped = (
@@ -1116,7 +1158,7 @@ def _commit_rewritten_blocks(
             f"rewrite parity check failed: replacement holds {n_tmp} "
             f"rows, {parity_label}; original dir untouched"
         )
-    n_new_blocks = mapping.count()
+    n_new_blocks = len(block_ids)
 
     base_ids.write.mode("append").parquet(_rewritten_dir(state_dir))
     sp = _purge_seq_path(state_dir)

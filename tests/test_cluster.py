@@ -24,6 +24,8 @@ from d6tstack_spark.plans.checkpoint import (
 )
 from d6tstack_spark.plans.maintenance import cluster_blocks, purge_deletes
 
+pytestmark = pytest.mark.usefixtures("no_persisted_rdds")
+
 
 def _mk_time_ordered(tmp_path, n_files=3, n=1200):
     """Files ordered by ts; conv_ids cycle across the whole range, so
@@ -95,6 +97,13 @@ def test_cluster_preserves_rows_and_improves_pruning(spark, state):
     assert _qualifying_files(spark, sd, "c007") < n_files_before / 2
     got = decode_state(spark, sd, where="conv_id = 'c007'")
     assert _key(got) == [t for t in before if t[1] == "c007"]
+
+
+def test_cluster_encodes_every_row_once(spark, state, local_encode_rows):
+    sd, paths = state
+    rep = cluster_blocks(spark, sd, cluster_by=("conv_id", "turn_idx"))
+    assert rep["rows"] == 3600
+    assert local_encode_rows.value == rep["rows"]
 
 
 def test_cluster_refuses_pending_tombstones(spark, state):

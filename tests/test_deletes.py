@@ -12,20 +12,28 @@ encoded."""
 from __future__ import annotations
 
 import glob
+import json
 import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from pyspark.sql import functions as F
+
+import d6tstack_spark.operators.sinks as sinks
 import d6tstack_spark.plans.maintenance as maintenance
+from d6tstack_spark.operators.encode import SUB_BLOCK_BITS
 from d6tstack_spark.plans.checkpoint import (
+    _purge_seq_path,
     decode_state,
     delete_where,
     encode_resume,
     load_deletes,
 )
 from d6tstack_spark.plans.maintenance import purge_deletes
+
+pytestmark = pytest.mark.usefixtures("no_persisted_rdds")
 
 
 _DD_CON = None
@@ -296,6 +304,104 @@ def test_two_purge_generations_ids_stay_disjoint(spark, state):
     ), "rewritten ids collided across purge generations"
     want = _rows(src.filter("conv_id NOT IN ('a0001', 'a0002')"))
     assert _rows(decode_state(spark, sd)) == want
+
+
+def _rewritten_blocks(spark, sd):
+    """``{block_id: n_rows}`` of the blocks a rewrite wrote (bit-61 ids)."""
+    return {
+        r[0]: r[1]
+        for r in spark.read.parquet(os.path.join(sd, "blocks"))
+        .filter(F.col("block_id") >= maintenance._REWRITE_ID_BIT)
+        .groupBy("block_id")
+        .agg(F.max("n_rows"))
+        .collect()
+    }
+
+
+def _purge_seq(sd):
+    try:
+        with open(_purge_seq_path(sd)) as f:
+            return json.load(f)["next"]
+    except FileNotFoundError:
+        return 0
+
+
+def test_purge_encodes_kept_slice_once(spark, state, local_encode_rows):
+    paths, sd, src = state
+    delete_where(spark, sd, "conv_id >= 'b0050' AND conv_id < 'b0150'")
+    rep = purge_deletes(spark, sd)
+    n_kept = sum(_rewritten_blocks(spark, sd).values())
+    assert rep["matched"] == 600 and n_kept > 0
+    assert local_encode_rows.value == n_kept
+
+
+def test_purge_matching_nothing_clears_tombstones_without_rewrite(
+    spark, state
+):
+    paths, sd, src = state
+    # inside the 'b' file's zone range, but no conv_id has this suffix
+    delete_where(spark, sd, "conv_id = 'b0050x'", count_matches=False)
+    assert load_deletes(sd)
+    listing = sorted(os.listdir(os.path.join(sd, "blocks")))
+    rep = purge_deletes(spark, sd)
+    assert rep["matched"] == 0 and rep["files_rewritten"] == 0
+    assert load_deletes(sd) == []
+    assert sorted(os.listdir(os.path.join(sd, "blocks"))) == listing
+    assert _rows(decode_state(spark, sd)) == _rows(src)
+
+
+def test_purge_rewrite_ids_dense_and_counter_advances(spark, state):
+    paths, sd, src = state
+
+    def dense(lo, hi):
+        return [
+            maintenance._REWRITE_ID_BIT + (i << SUB_BLOCK_BITS)
+            for i in range(lo + 1, hi + 1)
+        ]
+
+    assert _purge_seq(sd) == 0
+    delete_where(spark, sd, "conv_id >= 'b0050' AND conv_id < 'b0150'")
+    n1 = purge_deletes(spark, sd)["blocks_written"]
+    assert n1 > 0
+    assert _purge_seq(sd) == n1
+    assert sorted(_rewritten_blocks(spark, sd)) == dense(0, n1)
+    # the 'c' range never overlaps the first rewrite's 'b' blocks, so
+    # both generations stay live and together fill 1..n1+n2
+    delete_where(spark, sd, "conv_id >= 'c0050' AND conv_id < 'c0150'")
+    n2 = purge_deletes(spark, sd)["blocks_written"]
+    assert n2 > 0
+    assert _purge_seq(sd) == n1 + n2
+    assert sorted(_rewritten_blocks(spark, sd)) == dense(0, n1 + n2)
+    # replacement files keep block_id REQUIRED, like the encoder's own
+    for f in glob.glob(os.path.join(sd, "blocks", "*.parquet")):
+        assert not pq.read_schema(f).field("block_id").nullable, f
+
+
+def test_purge_parity_failure_leaves_state_untouched(
+    spark, state, monkeypatch
+):
+    paths, sd, src = state
+    delete_where(spark, sd, "conv_id >= 'b0050' AND conv_id < 'b0150'")
+    bd = os.path.join(sd, "blocks")
+    listing = sorted(os.listdir(bd))
+    before = _rows(decode_state(spark, sd))
+    write_blocks = sinks.write_blocks
+    first_id = maintenance._REWRITE_ID_BIT + (1 << SUB_BLOCK_BITS)
+
+    def drop_one_block(blocks, path, *args, **kwargs):
+        write_blocks(
+            blocks.filter(F.col("block_id") != first_id), path, *args, **kwargs
+        )
+
+    monkeypatch.setattr(sinks, "write_blocks", drop_one_block)
+    with pytest.raises(RuntimeError, match="parity check failed"):
+        purge_deletes(spark, sd)
+    assert sorted(os.listdir(bd)) == listing
+    assert not os.path.exists(bd + ".purge")
+    assert not os.path.exists(os.path.join(sd, "purge_commit.json"))
+    assert _purge_seq(sd) == 0
+    assert load_deletes(sd)  # tombstone still pending, still applied
+    assert _rows(decode_state(spark, sd)) == before
 
 
 # --------------------------------------------------------------- property

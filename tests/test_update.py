@@ -25,6 +25,9 @@ from d6tstack_spark.plans.checkpoint import (
     load_snapshots,
 )
 from d6tstack_spark.plans.maintenance import update_where
+from test_deletes import _rewritten_blocks
+
+pytestmark = pytest.mark.usefixtures("no_persisted_rdds")
 
 
 def _mk_files(tmp_path, prefixes=("a", "b", "c"), n=1200):
@@ -89,6 +92,15 @@ def test_update_targets_only_qualifying_files(spark, state):
     assert 0 < rep["files_rewritten"] < rep["files_scanned"]
     want = _rows(_expected(src, {"text": "upper(text)"}, pred))
     assert _rows(decode_state(spark, sd)) == want
+
+
+def test_update_encodes_rewritten_slice_once(spark, state, local_encode_rows):
+    paths, sd, src = state
+    pred = "conv_id >= 'b0050' AND conv_id < 'b0100'"
+    rep = update_where(spark, sd, {"text": "upper(text)"}, pred)
+    n_rewritten = sum(_rewritten_blocks(spark, sd).values())
+    assert rep["matched"] < n_rewritten < src.count()
+    assert local_encode_rows.value == n_rewritten
 
 
 def test_update_null_predicate_rows_unchanged(spark, state):
